@@ -22,7 +22,7 @@ object Graft {
       classic.experimental.extraStrategies = classic.experimental.extraStrategies ++
         Seq(IntervalJoinStrategy(spark), graft.plans.GenomicStrategy(spark))
     }
-    // Rule parity with GraftExtensions (r14 VERDICT #1): without these the
+    // Rule parity with GraftExtensions: without these the
     // imperative attachment silently loses the scale-critical rewrites —
     // the featureCounts shape pair-materializes instead of planning
     // IntervalCountJoinNode, over-budget inner joins take the
@@ -37,8 +37,8 @@ object Graft {
     // extensions-built session is harmless. NearestJoinDedupRule needs no
     // mirror here: self nearest-joins dedup at TVF-BUILD time
     // (`GraftTableFunctions.nearestSides` re-aliases the right side with
-    // fresh ExprIds), which runs identically on both attachment paths
-    // (r15 VERDICT #6); the analysis rule remains on the extensions path
+    // fresh ExprIds), which runs identically on both attachment paths;
+    // the analysis rule remains on the extensions path
     // purely as a backstop for direct node construction.
     // Skip the append when the session's optimizer ALREADY carries the
     // injected rules (extensions-built session) — they run in their

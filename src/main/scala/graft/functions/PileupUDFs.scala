@@ -1,6 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.expressions.UserDefinedFunction
+import org.apache.spark.sql.functions.udf
 
 import scala.collection.mutable
 
@@ -50,15 +53,24 @@ object PileupUDFs {
       .map { case (k, v) => s"$k -> (" + v.toSeq.sortBy(_._1).map { case (c, n) => s"$c -> $n" }.mkString(", ") + ")" }
       .mkString("; ")
 
+  private[graft] val udfs: Seq[(String, UserDefinedFunction)] = Seq(
+    "quals_to_map" -> udf(qualsToMap _),
+    "to_charmap" -> udf(qualsToCharMap _),
+    "quals_to_cov" -> udf(qualsToCoverage _),
+    "quals_to_char" -> udf((m: Map[Byte, Map[String, Short]]) => byteKeysToChar(m)),
+    "alts_to_char" -> udf((m: Map[Byte, Short]) => byteKeysToChar(m)),
+    "altmap_to_str" -> udf(altMapToString _),
+    "qualsmap_to_str" -> udf(qualsMapToString _),
+    "cov_equals" -> udf((a: Short, b: Short) => a == b))
+
+  /** Registers each UDF the session does not have yet: a repeated
+    * [[graft.Graft.ensure]] replaces nothing, so it logs no "replaced a
+    * previously registered function" warnings. */
   def register(spark: SparkSession): Unit = {
-    val u = spark.udf
-    u.register("quals_to_map", qualsToMap _)
-    u.register("to_charmap", qualsToCharMap _)
-    u.register("quals_to_cov", qualsToCoverage _)
-    u.register("quals_to_char", (m: Map[Byte, Map[String, Short]]) => byteKeysToChar(m))
-    u.register("alts_to_char", (m: Map[Byte, Short]) => byteKeysToChar(m))
-    u.register("altmap_to_str", altMapToString _)
-    u.register("qualsmap_to_str", qualsMapToString _)
-    u.register("cov_equals", (a: Short, b: Short) => a == b)
+    val freg = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.functionRegistry
+    udfs.foreach { case (name, f) =>
+      if (!freg.functionExists(FunctionIdentifier(name))) spark.udf.register(name, f)
+    }
   }
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.plans.BroadcastBudget
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -52,14 +53,9 @@ object EmbeddingOps {
     * a large one would otherwise OOM the driver with no actionable
     * message. */
   private def requireBroadcastable(df: DataFrame, what: String): Unit = {
-    val maxBytes = df.sparkSession.conf
-      .get("spark.graft.rangejoin.maxBroadcastBytes", (256L << 20).toString).toLong
-    val estimated = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    require(estimated <= BigInt(maxBytes),
-      s"$what is estimated at $estimated bytes, over " +
-      s"spark.graft.rangejoin.maxBroadcastBytes=$maxBytes — it is collected and " +
-      "shipped to every task. The query side must be the small side: swap the " +
-      "arguments, pre-filter, or raise the conf if the driver can hold it.")
+    BroadcastBudget.requireFits(df, what,
+      "it is collected and shipped to every task. The query side must be the small side: " +
+      "swap the arguments, pre-filter, or raise the conf if the driver can hold it.")
   }
 
   private def rerankTopK(candidates: DataFrame, corpus: DataFrame,

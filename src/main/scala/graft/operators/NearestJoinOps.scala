@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.plans.BroadcastBudget
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow, UnsafeProjection}
@@ -89,17 +90,14 @@ object NearestJoinOps {
 
   /** As [[nearestJoin]] with the regime passed explicitly — callers that
     * pin a regime (tests, the query suite) use this instead of mutating
-    * session conf (r8 ADVICE: conf writes leaked across query lambdas). */
+    * session conf, whose writes would leak across query lambdas. */
   def nearestJoin(left: DataFrame, right: DataFrame, method: String): DataFrame = {
-    val spark = left.sparkSession
-    val maxBytes = spark.conf
-      .get("spark.graft.rangejoin.maxBroadcastBytes", (256L << 20).toString).toLong
     method match {
       case "broadcast" => broadcastNearestJoin(left, right)
       case "merge" => mergeNearestJoin(left, right)
       case "auto" =>
-        val fits = right.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(maxBytes)
-        if (fits) broadcastNearestJoin(left, right) else mergeNearestJoin(left, right)
+        if (BroadcastBudget.fits(right)) broadcastNearestJoin(left, right)
+        else mergeNearestJoin(left, right)
       case other => throw new IllegalArgumentException(
         s"nearest join method must be auto|broadcast|merge, got '$other'")
     }
@@ -155,14 +153,10 @@ object NearestJoinOps {
     require(k >= 1, s"nearestKJoin needs k >= 1, got $k")
     require(Set("both", "upstream", "downstream")(direction),
       s"nearestKJoin direction must be both|upstream|downstream, got '$direction'")
-    val spark = left.sparkSession
-    val maxBytes = spark.conf
-      .get("spark.graft.rangejoin.maxBroadcastBytes", (256L << 20).toString).toLong
-    val estimated = right.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (estimated <= BigInt(maxBytes))
+    if (BroadcastBudget.fits(right))
       return nearestKJoinUngated(left, right, k, ignoreOverlaps, direction, signed)
     // Over budget: the distributed expanding-window merge regime carries
-    // the direction/overlap/sign flags too (r14 VERDICT #6) — big
+    // the direction/overlap/sign flags too — big
     // catalogs get `bedtools closest -io/-id/-iu/-D ref` semantics with
     // no driver collect, same results as the broadcast ranking probe.
     mergeNearestKJoin(left, right, k, ignoreOverlaps, direction, signed)

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.plans.BroadcastBudget
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -54,11 +55,9 @@ object RangeSetOps {
     * When the answer is no (an adversarial side with tens of millions of
     * disjoint runs), the hint is dropped and the interval-join strategy
     * takes its bin-range shuffle path for the same join shape — nothing
-    * is force-collected to the driver (r5 ADVICE). */
+    * is force-collected to the driver. */
   private def shouldBroadcast(runs: DataFrame, sizeProxy: DataFrame): Boolean = {
-    val maxBytes = sizeProxy.sparkSession.conf
-      .get("spark.graft.rangejoin.maxBroadcastBytes", (256L << 20).toString).toLong
-    if (sizeProxy.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(maxBytes)) true
+    if (BroadcastBudget.fits(sizeProxy)) true
     else {
       // Width from the ACTUAL schema (liftover's chain side carries
       // dest_contig/offset/strand on top of the 3 run columns — a
@@ -68,7 +67,7 @@ object RangeSetOps {
         case StringType => 32L
         case _ => 8L
       }).sum
-      runs.count() * rowBytes <= maxBytes
+      runs.count() * rowBytes <= BroadcastBudget.bytes(runs.sparkSession)
     }
   }
 
@@ -323,9 +322,7 @@ object RangeSetOps {
     val (nB, lenB) = rbRuns
       .select(count(lit(1)), coalesce(sum(col("_be") - col("_bs") + 1).cast("long"), lit(0L)))
       .as[(Long, Long)].collect().headOption.getOrElse((0L, 0L))
-    val maxBytes = spark.conf
-      .get("spark.graft.rangejoin.maxBroadcastBytes", (256L << 20).toString).toLong
-    val rb = if (nB * 48L <= maxBytes) broadcast(rbRuns) else rbRuns
+    val rb = if (nB * 48L <= BroadcastBudget.bytes(spark)) broadcast(rbRuns) else rbRuns
     val inter = ra.join(rb,
         col("contig") === col("_bc") &&
           graft.functions.IntervalOverlaps.of(

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.plans.BroadcastBudget
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -488,11 +489,10 @@ object TextOps {
       else math.max(evalGrams.count(), 1L)
     // ~1.2 MB per 1M grams at 1% fpp; refuse sketches that would not fit
     // the same broadcast budget the exact path is held to.
-    val maxBytes = spark.conf
-      .get("spark.graft.rangejoin.maxBroadcastBytes", (256L << 20).toString).toLong
+    val maxBytes = BroadcastBudget.bytes(spark)
     require(expected * 10 / 8 <= maxBytes,
       s"eval gram cardinality $expected needs a Bloom sketch over " +
-        s"spark.graft.rangejoin.maxBroadcastBytes=$maxBytes; shard the eval set")
+        s"${BroadcastBudget.Key}=$maxBytes; shard the eval set")
     val bloom = evalGrams.stat.bloomFilter("gram", expected, fpp)
     val bloomB = spark.sparkContext.broadcast(bloom)
     val mightContain = udf((g: String) => bloomB.value.mightContainString(g))

@@ -55,9 +55,9 @@ object RangeJoinChoice {
     }
     val buildSize = if (buildLeft) left.stats.sizeInBytes else right.stats.sizeInBytes
     val buildHinted = if (buildLeft) hintLeft else hintRight
-    val maxBroadcast = conf("maxBroadcastBytes", (256L << 20).toString).toLong
+    val maxBroadcast = conf(BroadcastBudget.Name, BroadcastBudget.Default.toString).toLong
     val binRange = method match {
-      case "binrange" | "twophase" => true
+      case "binrange" => true
       case "broadcast" => false
       case _ if buildHinted => false
       case _ => buildSize > maxBroadcast
@@ -82,12 +82,11 @@ object RangeJoinChoice {
   * replanning works, and `OptimizeSkewedJoin` fires exactly as it does
   * for any stock equi-join (pinned by IntervalJoinSpec's AQE skew test).
   *
-  * The decision mirrors [[IntervalJoinStrategy]]'s Inner-join mode
-  * selection (method/buildSide/maxBroadcastBytes confs, broadcast hints,
-  * Catalyst stats); the strategy keeps its own `sqlBinRange` branch as a
-  * fallback for sessions that register the strategy without this rule,
-  * and refuses joins this rule already rewrote via
-  * [[BinRangeRewrite.isRewriteJoin]].
+  * The decision is [[RangeJoinChoice]], shared with
+  * [[IntervalJoinStrategy]] (method/buildSide/maxBroadcastBytes confs,
+  * broadcast hints, Catalyst stats); the strategy plans the same rewrite
+  * for sessions that register it without this rule, and refuses joins
+  * this rule already rewrote via [[BinRangeRewrite.isRewriteJoin]].
   */
 case class BinRangeLogicalRule(session: SparkSession) extends Rule[LogicalPlan] {
 
@@ -96,7 +95,6 @@ case class BinRangeLogicalRule(session: SparkSession) extends Rule[LogicalPlan] 
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     if (!conf("enabled", "true").toBoolean) return plan
-    if (conf("binrangeImpl", "sql") != "sql") return plan
     plan.transformUp {
       case j @ Join(_, _, Inner, Some(_), _) =>
         ExtractIntervalJoin.unapply(j) match {

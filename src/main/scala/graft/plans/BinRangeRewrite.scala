@@ -5,21 +5,18 @@ import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, Generate, Join, JoinHint, LogicalPlan, Project}
 import org.apache.spark.sql.types.{IntegerType, LongType}
 
-/** Inner bin-range interval join as a pure Catalyst rewrite — the shape
-  * the engine plans at shuffle scale (build side over the broadcast
+/** Inner bin-range interval join as a pure Catalyst rewrite — the one
+  * engine for inner joins at shuffle scale (build side over the broadcast
   * budget). Both sides explode to the fixed-width genome bins their
-  * interval overlaps, join on `(eq keys..., bin)` — a stock equi-join,
-  * so Tungsten shuffle serialization, whole-stage codegen, and AQE skew
-  * splitting all apply (the RDD-cogroup implementation, kept for
-  * differential testing under `spark.graft.rangejoin.binrangeImpl=
-  * cogroup`, gets none of these and buffers each (key,bin) group) — with
-  * the widened overlap core and the exactly-once first-intersection-bin
-  * dedup as non-equi join conjuncts evaluated inside the join's
-  * generated loop.
+  * interval overlaps, join on `(eq keys..., bin)` — a stock equi-join, so
+  * Tungsten shuffle serialization, whole-stage codegen, and AQE skew
+  * splitting all apply — with the widened overlap core and the
+  * exactly-once first-intersection-bin dedup as non-equi join conjuncts
+  * evaluated inside the join's generated loop.
   *
-  * Semantics identical to [[IntervalForestJoinExec]]'s BinRangeMode
-  * (maxGap widens the build side before binning and overlap/minOverlap
-  * use the widened values, reference
+  * Semantics identical to [[IntervalForestJoinExec]]'s broadcast forest
+  * and its non-inner BinRangeMode (maxGap widens the build side before
+  * binning and overlap/minOverlap use the widened values, reference
   * `IntervalTreeJoinOptimChromosomeImpl.scala:82-87`): a pair is emitted
   * exactly once because the first bin of its (widened) intersection is
   * provably covered by both sides' replica ranges whenever the join
@@ -71,8 +68,8 @@ object BinRangeRewrite {
     * `floorDiv(min(widened s, widened e))`, PRECOMPUTED once per input
     * row and carried through the explode, so the join's exactly-once
     * conjunct is a `Greatest` of two ready columns instead of a deep
-    * tree re-evaluated per candidate pair (the r11 generalization paid
-    * ~1.5× wall-clock on the flagship binrange join for exactly that).
+    * tree re-evaluated per candidate pair (re-evaluating it cost ~1.5×
+    * wall-clock on the flagship binrange join).
     * For `widen == 0` it equals the sequence lower bound and the column
     * is shared; they differ only on widened inverted (start > end) rows,
     * where the envelope floor `min(s,e) - widen` undershoots

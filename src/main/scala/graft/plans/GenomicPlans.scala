@@ -100,8 +100,8 @@ abstract class GenomicPipelineExec extends UnaryExecNode {
 
   override protected def doExecute(): RDD[InternalRow] = {
     // `session` is captured by SparkPlan at planning time — correct even
-    // when several sessions are active in the JVM (r2 ADVICE: don't re-read
-    // SparkSession.active at execution time).
+    // when several sessions are active in the JVM, unlike re-reading
+    // SparkSession.active at execution time.
     val spark = session
     val reads = ColumnBridge.internalFrame(spark, child.execute(), child.schema)
     val filtered = sampleId.fold(reads)(s => reads.filter(col("sample_id") === s))
@@ -139,8 +139,8 @@ case class PileupExec(override val output: Seq[Attribute],
 }
 
 /** `nearest_join(leftView, rightView[, method])` TVF plan node — the SQL
-  * surface for [[graft.operators.NearestJoinOps]] (r8 VERDICT #5: the
-  * operator was Scala-API only). Output = left columns ++ right columns
+  * surface for [[graft.operators.NearestJoinOps]], which is otherwise
+  * Scala-API only. Output = left columns ++ right columns
   * ++ `distance: Int`; the regime argument maps to the operator's
   * explicit-method dispatch. A BinaryNode, not a rewrite to `Join`: the
   * nearest semantics (min-distance window with all ties) has no stock
@@ -194,8 +194,8 @@ case class NearestJoinExec(override val output: Seq[Attribute], method: String,
   * and `right.output` share exprIds. The stock analyzer dedups only
   * `Join`'s right side (`ResolveReferences.dedupRight`); custom
   * BinaryNodes must do it themselves, else the node's output carries
-  * duplicate attribute IDs and downstream resolution is ambiguous
-  * (r9 ADVICE). Wrap the right child in a Project of fresh Aliases —
+  * duplicate attribute IDs and downstream resolution is ambiguous.
+  * Wrap the right child in a Project of fresh Aliases —
   * self-join semantics, same as stock Spark's dedup. */
 case class NearestJoinDedupRule(session: SparkSession)
     extends org.apache.spark.sql.catalyst.rules.Rule[LogicalPlan] {
@@ -208,8 +208,8 @@ case class NearestJoinDedupRule(session: SparkSession)
   }
 }
 
-/** Optimizer rule: projection pruning through [[NearestJoinNode]]
-  * (r9 VERDICT stretch #7). The node passes every child column through
+/** Optimizer rule: projection pruning through [[NearestJoinNode]].
+  * The node passes every child column through
   * positionally, so its `references` pin all child outputs and stock
   * ColumnPruning can never prune below it — a `SELECT a_key, distance`
   * over the TVF would ride every wide column through the merge regime's
@@ -246,8 +246,7 @@ case class GenomicStrategy(session: SparkSession) extends SparkStrategy {
     case n @ NearestJoinNode(l, r, method, k, _) =>
       // Internal invariant, not a user path: self nearest-joins dedup at
       // TVF-build time (`GraftTableFunctions.nearestSides` re-aliases the
-      // right side with fresh ExprIds on BOTH attachment paths — r15
-      // VERDICT #6 deleted the ensure-path loud-fail), and the
+      // right side with fresh ExprIds on BOTH attachment paths), and the
       // extensions-path [[NearestJoinDedupRule]] backstops direct node
       // construction. A collision here means a new construction site
       // bypassed both; positional binding would silently emit the LEFT
@@ -260,13 +259,11 @@ case class GenomicStrategy(session: SparkSession) extends SparkStrategy {
       // whose LogicalRDD stats default to spark.sql.defaultSizeInBytes, so
       // an `auto` left for the operator to resolve would never see the
       // right side fit the broadcast budget and silently always pick the
-      // merge regime (r9 VERDICT #1 — the SQL surface lost the fast path).
-      val maxBytes = session.conf
-        .get("spark.graft.rangejoin.maxBroadcastBytes", (256L << 20).toString).toLong
-      val fits = r.stats.sizeInBytes <= BigInt(maxBytes)
-      // k > 1 over budget resolves to the expanding-window merge regime
-      // (r10 VERDICT #5) — the TVF surface is the base k-nearest, which
-      // the merge regime covers fully.
+      // merge regime, and the SQL surface would lose the fast path.
+      val fits = BroadcastBudget.fits(r, BroadcastBudget.bytes(session))
+      // k > 1 over budget resolves to the expanding-window merge regime —
+      // the TVF surface is the base k-nearest, which the merge regime
+      // covers fully.
       val resolved = if (method == "auto") {
         if (fits) "broadcast" else "merge"
       } else method

@@ -293,7 +293,7 @@ case class IntervalCountPushdownRule(session: SparkSession)
           // Regime from the ONE shared mode decision: broadcast rank index
           // under the budget, per-(key,bin) shuffled rank indexes above it
           // (featureCounts-shaped aggregates stay pair-free exactly when
-          // data is biggest — r10 VERDICT #1).
+          // data is biggest).
           (buildLeft, binRange) = RangeJoinChoice.choose(
             conf, Inner, jl, jr, hint, RangeJoinChoice.method(conf, keys))
         } yield {
@@ -482,23 +482,9 @@ case class IntervalCountJoinExec(keys: IntervalJoinKeys, countLeft: Boolean,
       }
     }.collect()
     longMetric("buildRows") += collected.length
-    if (enforceBuildBudget) {
-      // Runtime stats-lie guard, same contract as IntervalForestJoinExec.
-      val actualBytes = collected.foldLeft(0L) { case (acc, (k, _, _, r)) =>
-        acc + k.getSizeInBytes.toLong + 16L + (r match {
-          case u: UnsafeRow => u.getSizeInBytes.toLong
-          case _ => 64L
-        })
-      }
-      val budget = conf.getConfString(
-        "spark.graft.rangejoin.maxBroadcastBytes", (256L << 20).toString).toLong
-      val slack = conf.getConfString("spark.graft.rangejoin.buildBytesSlack", "4.0").toDouble
-      if (actualBytes > budget * slack) throw new IllegalStateException(
-        s"interval-count-join build side is $actualBytes bytes at runtime, over " +
-        s"${slack}x the spark.graft.rangejoin.maxBroadcastBytes budget ($budget). " +
-        "Raise the budget, broadcast()-hint the side to take responsibility, or " +
+    if (enforceBuildBudget) BroadcastBudget.checkCollected(conf, collected,
+      "Raise the budget, broadcast()-hint the side to take responsibility, or " +
         "set spark.graft.rangejoin.countPushdown=false to take the general path.")
-    }
     val rowsArr: Array[InternalRow] = collected.map(_._4)
     // Cross-side SUM plumbing: the exprs live on whichever side the
     // counted side is NOT.

@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.plans.{FullOuter, Inner, JoinType, LeftAnti, LeftOuter, LeftSemi, RightOuter}
 import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, UnknownPartitioning}
 import org.apache.spark.sql.execution.{BinaryExecNode, CodegenSupport, SparkPlan}
-import org.apache.spark.sql.execution.metric.SQLMetrics
+import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 
 import scala.collection.mutable
 
@@ -28,17 +28,22 @@ case object BinRangeMode extends IntervalJoinMode
   * magnitude at scale (SURVEY §6): the 100 TB side streams through untouched
   * while only the small annotation side moves.
   *
-  * '''BinRangeMode''' — when the build side is too large to broadcast, both
-  * sides are replicated to the fixed-width genome bins their interval
-  * overlaps and cogrouped on `(eqKey, bin)`; each bin builds a local forest
-  * from its build intervals and probes its stream intervals. A pair whose
-  * intersection spans several bins is emitted only from the first bin of the
-  * intersection, so output is exactly-once without any dedup shuffle. Unlike
-  * a rowId re-join (the reference's two-phase,
-  * `IntervalTreeJoinOptimChromosomeImpl.scala:128-168`, which still collects
-  * every build interval to the driver), this never materializes anything on
-  * the driver, needs no RDD persist, and is deterministic under task retry —
-  * the properties that matter at 1000 executors.
+  * '''BinRangeMode''' — non-inner joins whose build side is too large to
+  * broadcast (an inner join at that scale plans as [[BinRangeRewrite]], a
+  * stock equi-join). Both sides are replicated to the fixed-width genome
+  * bins their interval overlaps and cogrouped on `(eqKey, bin)`; each bin
+  * builds a local forest from its build intervals and probes its stream
+  * intervals. A pair whose intersection spans several bins is emitted only
+  * from the first bin of the intersection, so output is exactly-once
+  * without any dedup shuffle. Whether a row matched is a property of all
+  * its replicas, so per-bin verdicts aggregate by row id. Nothing is
+  * collected to the driver and nothing is persisted, so the join is
+  * deterministic under task retry.
+  *
+  * Every interpreted probe — broadcast inner, semi, anti and outer, both
+  * full-outer passes, both bin-range passes — goes through [[JoinTask]]:
+  * one projection of a row's key and interval ([[KeyInterval]]) and one
+  * candidate test ([[Probe.foreachMatch]]).
   *
   * Re-expression of the reference's
   * `IntervalTreeJoinOptimChromosome{,Impl}.scala` (see SURVEY §2.3 J1-J7):
@@ -73,15 +78,13 @@ case class IntervalForestJoinExec(
     // Spark hint semantics — so the guard stands down.
     enforceBuildBudget: Boolean = true) extends BinaryExecNode with CodegenSupport {
 
-  // Non-inner joins (beyond the reference): for one-sided types the
-  // preserved side is always the stream side (strategy guarantees
-  // buildLeft=false for Left*, buildLeft=true for RightOuter), so unmatched
-  // stream rows can be emitted locally — no global matched-set tracking,
-  // the same restriction Spark's own BroadcastHashJoinExec imposes.
-  // FullOuter additionally tracks matched build rows globally: a bitset
-  // side-job in broadcast mode, build-row-id verdicts in bin-range mode —
-  // single-pass over each child, unlike the LeftOuter ∪ RightAnti
-  // decomposition it replaced (which scanned both sides twice).
+  // For one-sided non-inner types the preserved side is always the stream
+  // side (the strategy builds right for Left*, left for RightOuter), so
+  // unmatched stream rows are emitted locally with no global matched-set
+  // tracking — the restriction Spark's own BroadcastHashJoinExec imposes.
+  // FullOuter also tracks matched build rows globally: a bitset side-job
+  // in broadcast mode, build-row verdicts in bin-range mode — one plan
+  // node that scans each child once per pass.
   override def output: Seq[Attribute] = joinType match {
     case Inner => left.output ++ right.output
     case LeftOuter => left.output ++ right.output.map(_.withNullability(true))
@@ -109,73 +112,43 @@ case class IntervalForestJoinExec(
     (bound(s, streamedPlan), bound(e, streamedPlan), eqs.map(bound(_, streamedPlan)))
   }
 
-  /** Runtime stats-lie guard (only for stats-made decisions, see
-    * enforceBuildBudget): the strategy picked broadcast from Catalyst
-    * ESTIMATES, which can under-shoot by orders of magnitude after
-    * selective filters. Broadcasting a multi-GB forest to a 1000-executor
-    * cluster is a cluster-killer, so fail fast — with actionable advice —
-    * when the ACTUAL collected bytes blow past `buildBytesSlack`x the
-    * budget (default 4x, so estimate noise never flips a working query;
-    * Spark's own driver.maxResultSize still backstops the collect).
-    * Shared by EVERY broadcast-mode collect — the common forest build and
-    * full outer's own collect (which keeps null-key rows, hence the
-    * nullable key). */
-  private def checkBuildBudget(collected: Iterator[(UnsafeRow, InternalRow)]): Unit = {
-    if (!enforceBuildBudget) return
-    val actualBytes = collected.foldLeft(0L) { case (acc, (k, r)) =>
-      acc + (if (k == null) 0L else k.getSizeInBytes.toLong) + 16L + (r match {
-        case u: UnsafeRow => u.getSizeInBytes.toLong
-        case _ => 64L
-      })
-    }
-    val budget = conf.getConfString(
-      "spark.graft.rangejoin.maxBroadcastBytes", (256L << 20).toString).toLong
-    val slack = conf.getConfString("spark.graft.rangejoin.buildBytesSlack", "4.0").toDouble
-    if (actualBytes > budget * slack) {
-      throw new IllegalStateException(
-        s"interval-join build side is $actualBytes bytes at runtime, over ${slack}x the " +
-          s"spark.graft.rangejoin.maxBroadcastBytes budget ($budget) the broadcast " +
-          "decision was made against (plan statistics under-estimated it). Either " +
-          "raise the budget if the cluster can hold the broadcast, force the side " +
-          "with a broadcast() hint to take responsibility, or set " +
-          "spark.graft.rangejoin.method=binrange to take the shuffle path.")
-    }
-  }
+  /** The join's settings, which task closures capture instead of the plan. */
+  @transient private lazy val task = JoinTask(joinType, buildLeft, minOverlap, maxGap,
+    binWidth, residual, left.output ++ right.output, output, buildPlan.output.length,
+    streamedPlan.output.length, bEqsB, Seq(bStartB, bEndB), sEqsB, Seq(sStartB, sEndB),
+    longMetric("numOutputRows"), longMetric("buildRows"))
 
-  /** Build-side collect → per-key holder → broadcast, shared by the
-    * interpreted and codegen probe paths (built at most once per execute). */
-  @transient private lazy val broadcastForests
-      : Broadcast[Map[UnsafeRow, IntervalHolder[InternalRow]]] = {
-    val nEqs = bEqsB.length
-    val bEqsLocal = bEqsB
-    val bIvLocal = Seq(bStartB, bEndB)
+  /** The build side collected to the driver as `(key, start, end, row)`,
+    * counted in `buildRows` and held to the broadcast budget. A row that
+    * can never match is kept, with a null key, only if `keepUnmatchable`
+    * (full outer preserves it). */
+  private def collectBuild(keepUnmatchable: Boolean): Array[(UnsafeRow, Int, Int, InternalRow)] = {
+    val t = task
     val collected = buildPlan.execute().mapPartitions { it =>
-      val keyProj = UnsafeProjection.create(bEqsLocal)
-      val ivProj = UnsafeProjection.create(bIvLocal)
+      val kv = t.keyInterval(build = true)
       it.flatMap { row =>
-        val iv = ivProj(row)
-        if (iv.isNullAt(0) || iv.isNullAt(1)) Iterator.empty
-        else {
-          val s = iv.getInt(0)
-          val e = iv.getInt(1)
-          val copy = row.copy()
-          val key = keyProj(copy)
-          // A null equality key can never satisfy EqualTo.
-          if (nEqs > 0 && key.anyNull) Iterator.empty
-          else Iterator.single((key.copy(), s, e, copy))
-        }
+        if (kv(row)) Iterator.single((kv.key.copy(), kv.start, kv.end, row.copy()))
+        else if (keepUnmatchable) Iterator.single((null: UnsafeRow, 0, 0, row.copy()))
+        else Iterator.empty
       }
     }.collect()
     longMetric("buildRows") += collected.length
-    checkBuildBudget(collected.iterator.map { case (k, _, _, r) => (k, r) })
-    // Pluggable holder (reference intervalHolderClassName conf): the
-    // broadcast structure is whatever the configured factory builds;
-    // the bin-range fallback always uses the array forest (per-bin
-    // locals are an execution detail, not a user structure).
-    val forests = IntervalHolderFactory.forName(holderClass)
-      .build[UnsafeRow, InternalRow](collected, maxGap)
-    sparkContext.broadcast(forests)
+    if (enforceBuildBudget) BroadcastBudget.checkCollected(conf, collected,
+      "Either raise the budget if the cluster can hold the broadcast, force the side " +
+        "with a broadcast() hint to take responsibility, or set " +
+        "spark.graft.rangejoin.method=binrange to take the shuffle path.")
+    collected
   }
+
+  /** Per-key holders of the matchable build rows, broadcast once and shared
+    * by the interpreted and codegen probes. The structure is whatever the
+    * configured holder factory builds (the reference's
+    * `intervalHolderClassName`); full outer and bin-range mode use the
+    * array forest, whose payload they choose. */
+  @transient private lazy val broadcastForests
+      : Broadcast[Map[UnsafeRow, IntervalHolder[InternalRow]]] =
+    sparkContext.broadcast(IntervalHolderFactory.forName(holderClass)
+      .build[UnsafeRow, InternalRow](collectBuild(keepUnmatchable = false), maxGap))
 
   // Broadcast mode probes per-partition over the unshuffled stream side, so
   // the stream partitioning survives — except full outer, whose output is
@@ -199,520 +172,126 @@ case class IntervalForestJoinExec(
   private def bound(e: Expression, plan: SparkPlan): Expression =
     BindReferences.bindReference(e, plan.output)
 
-  /** Replicate each row to every bin its (normalized, gap-widened on the
-    * build side) interval overlaps. Key = (eqKey bytes, bin). Null
-    * interval/key rows are dropped — callers that must preserve them
-    * (outer/anti stream sides) route them separately. */
-  private def binnedRdd(
-      plan: SparkPlan,
-      eqExprs: Seq[Expression],
-      ivExprs: Seq[Expression],
-      widen: Int,
-      nEqs: Int,
-      binW: Int): RDD[((UnsafeRow, Int), (Int, Int, InternalRow))] =
-    plan.execute().mapPartitions { it =>
-      val keyProj = UnsafeProjection.create(eqExprs)
-      val ivProj = UnsafeProjection.create(ivExprs)
-      it.flatMap { row =>
-        val iv = ivProj(row)
-        if (iv.isNullAt(0) || iv.isNullAt(1)) Iterator.empty
+  override protected def doExecute(): RDD[InternalRow] = (mode, joinType) match {
+    case (BroadcastForestMode, FullOuter) => broadcastFullOuter()
+    case (BroadcastForestMode, _) =>
+      task.probeStream(streamedPlan.execute(), broadcastForests, identity[InternalRow])
+    case (BinRangeMode, Inner) =>
+      throw new IllegalStateException("inner bin-range joins plan as BinRangeRewrite")
+    case (BinRangeMode, _) => binRange()
+  }
+
+  /** Full outer over the broadcast forest, shaped like Spark's own
+    * BroadcastNestedLoopJoinExec full outer: (1) the build side is
+    * collected once, unmatchable rows included, and its forest payloads
+    * carry the build-row index; (2) a probe-only side job over the stream
+    * side ORs up the matched-build bitset; (3) the main pass is the
+    * one-sided outer probe; (4) unmatched build rows null-pad from the
+    * driver — the build side is broadcast-small by mode selection. */
+  private def broadcastFullOuter(): RDD[InternalRow] = {
+    val collected = collectBuild(keepUnmatchable = true)
+    val forests: Map[UnsafeRow, IntervalHolder[(InternalRow, Int)]] = IntervalForest.forest(
+      collected.iterator.zipWithIndex.collect {
+        case ((k, s, e, r), i) if k != null => (k, s, e, (r, i))
+      }, maxGap)
+    val bcast = sparkContext.broadcast(forests)
+    val rowOf = (v: (InternalRow, Int)) => v._1
+    val t = task
+    val nBuild = collected.length
+    val matched = streamedPlan.execute().mapPartitionsWithIndex { (pidx, it) =>
+      val kv = t.keyInterval(build = false)
+      val p = new Probe(t, pidx)
+      val holders = bcast.value
+      val bits = new java.util.BitSet(nBuild)
+      it.foreach { srow =>
+        if (kv(srow)) holders.get(kv.key).foreach { h =>
+          p.foreachMatch(h, kv.start, kv.end, srow, rowOf)(v => bits.set(v._2))
+        }
+      }
+      Iterator.single(bits)
+    }.fold(new java.util.BitSet(nBuild)) { (a, b) => a.or(b); a }
+    val unmatched = collected.indices.collect { case i if !matched.get(i) => collected(i)._4 }
+    val padded = sparkContext
+      .parallelize(unmatched, math.max(1, math.min(
+        conf.numShufflePartitions, 1 + unmatched.length / 65536)))
+      .mapPartitionsWithIndex { (pidx, it) =>
+        val p = new Probe(t, pidx)
+        it.map(p.unmatchedBuild)
+      }
+    t.probeStream(streamedPlan.execute(), bcast, rowOf).union(padded)
+  }
+
+  /** Outer, semi, anti and full outer at shuffle scale, over one cogroup
+    * of both sides' bin replicas. Matched pairs never ride the verdict
+    * shuffle: they stream straight out of the cogroup (pass 1), so a
+    * whole-chromosome stream interval overlapping millions of build rows
+    * never concatenates its matches into one record. The verdict shuffle
+    * (pass 2) carries only `(id, row, matched)`:
+    *   semi — only matched stream replicas enter it, deduplicated by id;
+    *   anti, outer — every stream replica reports; OR-reduce by id, and
+    *     the never-matched are emitted bare (anti) or null-padded (outer);
+    *   full — build replicas report too; unmatched build ids null-pad.
+    * Both passes read the same cogroup, so the map stages run once and
+    * only the reduce side runs twice. */
+  private def binRange(): RDD[InternalRow] = {
+    val t = task
+    val numParts = conf.numShufflePartitions
+    val cg = t.binned(buildPlan.execute(), build = true)
+      .cogroup(t.binned(streamedPlan.execute(), build = false), numParts)
+    val rowOf = (v: (Long, InternalRow)) => v._2
+
+    def pairRows: RDD[InternalRow] = cg.mapPartitionsWithIndex { (pidx, groups) =>
+      val p = new Probe(t, pidx)
+      groups.flatMap { case ((_, bin), (buildRows, streamRows)) =>
+        if (bin == JoinTask.NoBin || buildRows.isEmpty || streamRows.isEmpty) Iterator.empty
         else {
-          val s = iv.getInt(0) - widen
-          val e = iv.getInt(1) + widen
-          val key = keyProj(row)
-          if (nEqs > 0 && key.anyNull) Iterator.empty
-          else {
-            val copy = row.copy()
-            val k = key.copy()
-            val lo = Math.floorDiv(math.min(s, e), binW)
-            val hi = Math.floorDiv(math.max(s, e), binW)
-            (lo to hi).iterator.map(b => ((k, b), (s, e, copy)))
+          val forest = JoinTask.forestOf(buildRows)
+          streamRows.iterator.flatMap { case (_, qs, qe, srow) =>
+            val matches = mutable.ArrayBuffer.empty[InternalRow]
+            p.foreachMatch(forest, qs, qe, srow, rowOf, bin)(v => matches += v._2)
+            p.pairs(srow, matches.iterator)
           }
         }
       }
     }
 
-  override protected def doExecute(): RDD[InternalRow] = {
-    val (buildPlan, streamPlan) = (this.buildPlan, this.streamedPlan)
-    val (bStart, bEnd, bEqs) =
-      if (buildLeft) (keys.leftStart, keys.leftEnd, keys.leftEqs)
-      else (keys.rightStart, keys.rightEnd, keys.rightEqs)
-    val (sStart, sEnd, sEqs) =
-      if (buildLeft) (keys.rightStart, keys.rightEnd, keys.rightEqs)
-      else (keys.leftStart, keys.leftEnd, keys.leftEqs)
-
-    // Start/end are projected through UnsafeProjection (codegen'd) rather
-    // than interpreted Expression.eval — the probe runs once per stream row.
-    val bIvB = Seq(bound(bStart, buildPlan), bound(bEnd, buildPlan))
-    val sIvB = Seq(sStartB, sEndB)
-    val bEqsBL = bEqsB
-    val sEqsBL = sEqsB
-    val nEqs = bEqs.length
-    val buildIsLeft = buildLeft
-    val minOv = minOverlap
-    val gap = maxGap
-    val outAttrs = output
-    val numOutputRows = longMetric("numOutputRows")
-    val buildRowsMetric = longMetric("buildRows")
-
-    val jt = joinType
-    val residLocal = residual
-    // Candidate pair rows are always assembled in (left, right) order.
-    val pairAttrs = left.output ++ right.output
-    val nBuildCols = buildPlan.output.length
-
-    mode match {
-      case BroadcastForestMode if jt == Inner =>
-        // (1) Build side collected, assembled into per-key holders and
-        //     broadcast (shared lazy val — also used by the codegen path).
-        val bcast = broadcastForests
-
-        // (2) Stream side probes per partition; no shuffle.
-        streamPlan.execute().mapPartitions { it =>
-          val keyProj = UnsafeProjection.create(sEqsBL)
-          val ivProj = UnsafeProjection.create(sIvB)
-          val joinedRow = new JoinedRow
-          val resultProj = UnsafeProjection.create(outAttrs, outAttrs)
-          val forestMap = bcast.value
-          it.flatMap { srow =>
-            val iv = ivProj(srow)
-            if (iv.isNullAt(0) || iv.isNullAt(1)) Iterator.empty
-            else {
-              val key = keyProj(srow)
-              if (nEqs > 0 && key.anyNull) Iterator.empty
-              else forestMap.get(key) match {
-                case None => Iterator.empty
-                case Some(forest) =>
-                  val qs = iv.getInt(0)
-                  val qe = iv.getInt(1)
-                  val buf = mutable.ArrayBuffer.empty[InternalRow]
-                  forest.foreachOverlap(qs, qe) { (bs, be, brow) =>
-                    if (minOv <= 1 || math.min(be, qe) - math.max(bs, qs) + 1 >= minOv)
-                      buf += brow
-                  }
-                  buf.iterator.map { brow =>
-                    numOutputRows += 1
-                    resultProj(if (buildIsLeft) joinedRow(brow, srow) else joinedRow(srow, brow))
-                  }
-              }
-            }
+    // Stream ids are even, build ids odd.
+    val verdicts = cg.mapPartitionsWithIndex { (pidx, groups) =>
+      val p = new Probe(t, pidx)
+      groups.flatMap { case ((_, bin), (buildRows, streamRows)) =>
+        val out = mutable.ArrayBuffer.empty[(Long, (InternalRow, Boolean))]
+        val forest =
+          if (bin == JoinTask.NoBin || buildRows.isEmpty) null else JoinTask.forestOf(buildRows)
+        val matchedBids = mutable.HashSet.empty[Long]
+        streamRows.foreach { case (id, qs, qe, srow) =>
+          var matched = false
+          if (forest != null) p.foreachMatch(forest, qs, qe, srow, rowOf) { v =>
+            matched = true
+            if (t.joinType == FullOuter) matchedBids += v._1
           }
+          if (matched || t.joinType != LeftSemi) out += ((id << 1, (srow, matched)))
         }
-
-      case BroadcastForestMode if jt == FullOuter =>
-        // Full outer, single-plan (replaces the r4 LeftOuter ∪ null-padded
-        // RightAnti decomposition that scanned both children twice and
-        // built the forest twice). Shape mirrors Spark's own
-        // BroadcastNestedLoopJoinExec full-outer:
-        //   (1) build side collected ONCE — rows with a null interval/key
-        //       are kept (they can never match but must be preserved) and
-        //       excluded from the forest; forest payloads carry the
-        //       build-row index,
-        //   (2) a probe-only side-job over the stream side computes the
-        //       global matched-build bitset (no output materialization —
-        //       far cheaper than the RightAnti join it replaces),
-        //   (3) the main pass emits matched pairs + null-padded unmatched
-        //       stream rows (LeftOuter shape),
-        //   (4) unmatched build rows null-pad from the driver — the build
-        //       side is broadcast-small by mode selection.
-        val collected: Array[(UnsafeRow, Int, Int, InternalRow)] =
-          buildPlan.execute().mapPartitions { it =>
-            val keyProj = UnsafeProjection.create(bEqsBL)
-            val ivProj = UnsafeProjection.create(bIvB)
-            it.map { row =>
-              val iv = ivProj(row)
-              val copy = row.copy()
-              if (iv.isNullAt(0) || iv.isNullAt(1)) (null, 0, 0, copy)
-              else {
-                val key = keyProj(copy)
-                if (nEqs > 0 && key.anyNull) (null, 0, 0, copy)
-                else (key.copy(), iv.getInt(0), iv.getInt(1), copy)
-              }
-            }
-          }.collect()
-        buildRowsMetric += collected.length
-        checkBuildBudget(collected.iterator.map { case (k, _, _, r) => (k, r) })
-        val forests: Map[UnsafeRow, graft.operators.IntervalForest[(InternalRow, Int)]] =
-          graft.operators.IntervalForest.forest(
-            collected.iterator.zipWithIndex.collect {
-              case ((k, s, e, r), i) if k != null => (k, s, e, (r, i))
-            }, gap)
-        val bcast = sparkContext.broadcast(forests)
-        val nBuild = collected.length
-        val nStreamCols = streamedPlan.output.length
-        val pairSchema = pairAttrs
-
-        val matchedBits = streamPlan.execute().mapPartitionsWithIndex { (pidx, it) =>
-          val keyProj = UnsafeProjection.create(sEqsBL)
-          val ivProj = UnsafeProjection.create(sIvB)
-          val joinedRow = new JoinedRow
-          val pred = residLocal.map(Predicate.create(_, pairSchema))
-          pred.foreach(_.initialize(pidx))
-          def pair(brow: InternalRow, srow: InternalRow): InternalRow =
-            if (buildIsLeft) joinedRow(brow, srow) else joinedRow(srow, brow)
-          val bits = new java.util.BitSet(nBuild)
-          val forestMap = bcast.value
-          it.foreach { srow =>
-            val iv = ivProj(srow)
-            if (!iv.isNullAt(0) && !iv.isNullAt(1)) {
-              val key = keyProj(srow)
-              if (!(nEqs > 0 && key.anyNull)) forestMap.get(key).foreach { forest =>
-                val qs = iv.getInt(0)
-                val qe = iv.getInt(1)
-                forest.foreachOverlap(qs, qe) { (bs, be, v) =>
-                  if ((minOv <= 1 || math.min(be, qe) - math.max(bs, qs) + 1 >= minOv) &&
-                      pred.forall(_.eval(pair(v._1, srow))))
-                    bits.set(v._2)
-                }
-              }
-            }
-          }
-          Iterator.single(bits)
-        }.fold(new java.util.BitSet(nBuild)) { (a, b) => a.or(b); a }
-
-        val mainOut: RDD[InternalRow] = streamPlan.execute().mapPartitionsWithIndex[InternalRow] { (pidx, it) =>
-          val keyProj = UnsafeProjection.create(sEqsBL)
-          val ivProj = UnsafeProjection.create(sIvB)
-          val joinedRow = new JoinedRow
-          val resultProj = UnsafeProjection.create(outAttrs, outAttrs)
-          val pred = residLocal.map(Predicate.create(_, pairSchema))
-          pred.foreach(_.initialize(pidx))
-          val forestMap = bcast.value
-          val nullBuild = new GenericInternalRow(nBuildCols)
-          def pair(brow: InternalRow, srow: InternalRow): InternalRow =
-            if (buildIsLeft) joinedRow(brow, srow) else joinedRow(srow, brow)
-          it.flatMap { srow =>
-            val iv = ivProj(srow)
-            val matches = mutable.ArrayBuffer.empty[InternalRow]
-            if (!iv.isNullAt(0) && !iv.isNullAt(1)) {
-              val key = keyProj(srow)
-              if (!(nEqs > 0 && key.anyNull)) forestMap.get(key).foreach { forest =>
-                val qs = iv.getInt(0)
-                val qe = iv.getInt(1)
-                forest.foreachOverlap(qs, qe) { (bs, be, v) =>
-                  if ((minOv <= 1 || math.min(be, qe) - math.max(bs, qs) + 1 >= minOv) &&
-                      pred.forall(_.eval(pair(v._1, srow))))
-                    matches += v._1
-                }
-              }
-            }
-            if (matches.isEmpty) {
-              numOutputRows += 1
-              Iterator.single(resultProj(pair(nullBuild, srow)))
-            } else matches.iterator.map { brow =>
-              numOutputRows += 1
-              resultProj(pair(brow, srow))
-            }
-          }
+        if (t.joinType == FullOuter) buildRows.foreach { case (bid, _, _, brow) =>
+          out += (((bid << 1) | 1L, (brow, matchedBids.contains(bid))))
         }
+        out.iterator
+      }
+    }
 
-        val unmatchedBuild: IndexedSeq[InternalRow] =
-          collected.indices.collect { case i if !matchedBits.get(i) => collected(i)._4 }
-        val padded = sparkContext
-          .parallelize(unmatchedBuild, math.max(1, math.min(
-            conf.numShufflePartitions, 1 + unmatchedBuild.length / 65536)))
-          .mapPartitions[InternalRow] { it =>
-            val joinedRow = new JoinedRow
-            val resultProj = UnsafeProjection.create(outAttrs, outAttrs)
-            val nullStream = new GenericInternalRow(nStreamCols)
-            def pair(brow: InternalRow, srow: InternalRow): InternalRow =
-              if (buildIsLeft) joinedRow(brow, srow) else joinedRow(srow, brow)
-            it.map { brow =>
-              numOutputRows += 1
-              resultProj(pair(brow, nullStream))
-            }
-          }
-        mainOut.union(padded)
-
-      case BroadcastForestMode =>
-        // Outer/semi/anti probe: same broadcast forest, but a stream row
-        // with no (residual-surviving) match is preserved (outer: build
-        // side null-padded; anti: emitted bare) or used as the existence
-        // test (semi). Residuals must be decided per candidate pair HERE —
-        // a post-join filter would wrongly drop preserved rows.
-        val bcast = broadcastForests
-        val pairSchema = pairAttrs
-        streamPlan.execute().mapPartitionsWithIndex { (pidx, it) =>
-          val keyProj = UnsafeProjection.create(sEqsBL)
-          val ivProj = UnsafeProjection.create(sIvB)
-          val joinedRow = new JoinedRow
-          val resultProj = UnsafeProjection.create(outAttrs, outAttrs)
-          val pred = residLocal.map(Predicate.create(_, pairSchema))
-          pred.foreach(_.initialize(pidx))
-          val forestMap = bcast.value
-          val nullBuild = new GenericInternalRow(nBuildCols)
-          def pair(brow: InternalRow, srow: InternalRow): InternalRow =
-            if (buildIsLeft) joinedRow(brow, srow) else joinedRow(srow, brow)
-          it.flatMap { srow =>
-            val iv = ivProj(srow)
-            val nullSide = iv.isNullAt(0) || iv.isNullAt(1)
-            val matches = mutable.ArrayBuffer.empty[InternalRow]
-            if (!nullSide) {
-              val key = keyProj(srow)
-              if (!(nEqs > 0 && key.anyNull)) forestMap.get(key).foreach { forest =>
-                val qs = iv.getInt(0)
-                val qe = iv.getInt(1)
-                forest.foreachOverlap(qs, qe) { (bs, be, brow) =>
-                  if ((minOv <= 1 || math.min(be, qe) - math.max(bs, qs) + 1 >= minOv) &&
-                      pred.forall(_.eval(pair(brow, srow))))
-                    matches += brow
-                }
-              }
-            }
-            jt match {
-              case LeftSemi =>
-                if (matches.nonEmpty) { numOutputRows += 1; Iterator.single(resultProj(srow)) }
-                else Iterator.empty
-              case LeftAnti =>
-                if (matches.isEmpty) { numOutputRows += 1; Iterator.single(resultProj(srow)) }
-                else Iterator.empty
-              case _ => // LeftOuter / RightOuter (stream = preserved side)
-                if (matches.isEmpty) {
-                  numOutputRows += 1
-                  Iterator.single(resultProj(pair(nullBuild, srow)))
-                } else matches.iterator.map { brow =>
-                  numOutputRows += 1
-                  resultProj(pair(brow, srow))
-                }
-            }
-          }
+    val preserved = verdicts
+      .reduceByKey((a, b) => (a._1, a._2 || b._2), numParts)
+      .mapPartitionsWithIndex { (pidx, it) =>
+        val p = new Probe(t, pidx)
+        it.flatMap { case (id, (row, matched)) =>
+          if ((id & 1L) == 0L) p.preserved(row, matched)
+          else if (matched) Iterator.empty
+          else Iterator.single(p.unmatchedBuild(row))
         }
+      }
 
-      case BinRangeMode if jt == Inner =>
-        val binW = binWidth
-        val numParts = conf.numShufflePartitions
-
-        val buildBinned = binnedRdd(buildPlan, bEqsB, bIvB, gap, nEqs, binW)
-        val streamBinned = binnedRdd(streamPlan, sEqsB, sIvB, 0, nEqs, binW)
-
-        buildBinned.cogroup(streamBinned, numParts).mapPartitions { groups =>
-          val joinedRow = new JoinedRow
-          val resultProj = UnsafeProjection.create(outAttrs, outAttrs)
-          groups.flatMap { case ((_, bin), (buildRows, streamRows)) =>
-            if (buildRows.isEmpty || streamRows.isEmpty) Iterator.empty
-            else {
-              val items = buildRows.map { case (s, e, r) => (s, e, r) }.toIndexedSeq
-              buildRowsMetric += items.length
-              // Gap widening already applied at replication time.
-              val forest = IntervalForest(items)
-              streamRows.iterator.flatMap { case (qs, qe, srow) =>
-                val buf = mutable.ArrayBuffer.empty[InternalRow]
-                forest.foreachOverlap(qs, qe) { (bs, be, brow) =>
-                  // Exactly-once: only the first bin of the pair's
-                  // intersection emits it. Both replicas provably cover that
-                  // bin whenever the join predicate holds.
-                  val firstBin =
-                    Math.floorDiv(math.max(math.min(bs, be), math.min(qs, qe)), binW)
-                  if (firstBin == bin &&
-                      (minOv <= 1 || math.min(be, qe) - math.max(bs, qs) + 1 >= minOv))
-                    buf += brow
-                }
-                buf.iterator.map { brow =>
-                  numOutputRows += 1
-                  resultProj(if (buildIsLeft) joinedRow(brow, srow) else joinedRow(srow, brow))
-                }
-              }
-            }
-          }
-        }
-
-      case BinRangeMode =>
-        // Outer/semi/anti/full at shuffle scale. Matched-ness of a row is
-        // a GLOBAL property (its replicas see different bins), so both
-        // sides get unique ids (zipWithUniqueId — no extra job, unlike
-        // zipWithIndex) and per-bin verdicts aggregate by id. Matched
-        // PAIRS never ride the verdict shuffle: they are emitted directly
-        // from the cogroup (exactly-once by first-intersection-bin, as in
-        // inner mode), so no reduce record ever concatenates a stream
-        // row's full match list — a whole-chromosome stream interval
-        // overlapping millions of build rows streams its pairs instead of
-        // materializing them in one Seq (r4 ADVICE). The verdict shuffle
-        // carries only (id, row, matched) — bounded per record.
-        //   semi — only matched replicas enter the id shuffle (volume =
-        //          matched rows, deduped by reduceByKey),
-        //   anti — every replica reports (id, matched); OR-reduce, keep
-        //          the never-matched,
-        //   outer — unmatched stream ids null-pad; pairs come from the
-        //          direct pass (the cogroup's shuffle files are reused —
-        //          only the reduce side runs twice),
-        //   full — build replicas also report (bid, matched); unmatched
-        //          build ids null-pad on the stream side.
-        // Rows with a null interval/key never enter a real bin but are
-        // still preserved for outer/anti/full: they ship to a sentinel bin
-        // (no forest is built there) and aggregate as unmatched.
-        val binW = binWidth
-        val numParts = conf.numShufflePartitions
-        val pairSchema = pairAttrs
-        val sentinelBin = Int.MinValue
-        val fullOuter = jt == FullOuter
-        val nStreamCols = streamedPlan.output.length
-
-        // Build side with unique ids (consumed only by full-outer verdicts
-        // but carried uniformly — one Long per replica, no extra job).
-        // Null-interval/key build rows are preserved only for full outer.
-        val buildBinned: RDD[((UnsafeRow, Int), (Long, Int, Int, InternalRow))] =
-          buildPlan.execute().zipWithUniqueId().mapPartitions { it =>
-            val keyProj = UnsafeProjection.create(bEqsBL)
-            val ivProj = UnsafeProjection.create(bIvB)
-            it.flatMap { case (row, id) =>
-              val iv = ivProj(row)
-              if (iv.isNullAt(0) || iv.isNullAt(1)) {
-                if (fullOuter) {
-                  val copy = row.copy()
-                  Iterator.single(((keyProj(copy).copy(), sentinelBin), (id, 0, 0, copy)))
-                } else Iterator.empty
-              } else {
-                val s = iv.getInt(0) - gap
-                val e = iv.getInt(1) + gap
-                val key = keyProj(row)
-                if (nEqs > 0 && key.anyNull) {
-                  if (fullOuter) {
-                    val copy = row.copy()
-                    Iterator.single(((key.copy(), sentinelBin), (id, 0, 0, copy)))
-                  } else Iterator.empty
-                } else {
-                  val copy = row.copy()
-                  val k = key.copy()
-                  val lo = Math.floorDiv(math.min(s, e), binW)
-                  val hi = Math.floorDiv(math.max(s, e), binW)
-                  (lo to hi).iterator.map(b => ((k, b), (id, s, e, copy)))
-                }
-              }
-            }
-          }
-
-        val streamBinned: RDD[((UnsafeRow, Int), (Long, Int, Int, InternalRow))] =
-          streamPlan.execute().zipWithUniqueId().mapPartitions { it =>
-            val keyProj = UnsafeProjection.create(sEqsBL)
-            val ivProj = UnsafeProjection.create(sIvB)
-            it.flatMap { case (row, id) =>
-              val iv = ivProj(row)
-              val copy = row.copy()
-              if (iv.isNullAt(0) || iv.isNullAt(1))
-                Iterator.single(((keyProj(copy).copy(), sentinelBin), (id, 0, 0, copy)))
-              else {
-                val s = iv.getInt(0)
-                val e = iv.getInt(1)
-                val key = keyProj(copy)
-                if (nEqs > 0 && key.anyNull)
-                  Iterator.single(((key.copy(), sentinelBin), (id, 0, 0, copy)))
-                else {
-                  val k = key.copy()
-                  val lo = Math.floorDiv(math.min(s, e), binW)
-                  val hi = Math.floorDiv(math.max(s, e), binW)
-                  (lo to hi).iterator.map(b => ((k, b), (id, s, e, copy)))
-                }
-              }
-            }
-          }
-
-        // ONE shuffle: both per-bin passes below are children of the same
-        // cogrouped RDD, so the map stages run once and only the (cheap)
-        // reduce side re-runs for the second pass.
-        val cg = buildBinned.cogroup(streamBinned, numParts)
-
-        // Pass 1 (outer/full only): matched pairs, streamed out directly.
-        lazy val pairRows: RDD[InternalRow] = cg.mapPartitionsWithIndex { (pidx, groups) =>
-          val joinedRow = new JoinedRow
-          val resultProj = UnsafeProjection.create(outAttrs, outAttrs)
-          val pred = residLocal.map(Predicate.create(_, pairSchema))
-          pred.foreach(_.initialize(pidx))
-          def pair(brow: InternalRow, srow: InternalRow): InternalRow =
-            if (buildIsLeft) joinedRow(brow, srow) else joinedRow(srow, brow)
-          groups.flatMap { case ((_, bin), (buildRows, streamRows)) =>
-            if (bin == sentinelBin || buildRows.isEmpty || streamRows.isEmpty) Iterator.empty
-            else {
-              val items = buildRows.map { case (_, s, e, r) => (s, e, r) }.toIndexedSeq
-              val forest = IntervalForest(items)
-              streamRows.iterator.flatMap { case (_, qs, qe, srow) =>
-                val buf = mutable.ArrayBuffer.empty[InternalRow]
-                forest.foreachOverlap(qs, qe) { (bs, be, brow) =>
-                  if ((minOv <= 1 || math.min(be, qe) - math.max(bs, qs) + 1 >= minOv) &&
-                      Math.floorDiv(math.max(math.min(bs, be), math.min(qs, qe)), binW) == bin &&
-                      pred.forall(_.eval(pair(brow, srow))))
-                    buf += brow
-                }
-                buf.iterator.map { brow =>
-                  numOutputRows += 1
-                  resultProj(pair(brow, srow))
-                }
-              }
-            }
-          }
-        }
-
-        // Pass 2: per-replica verdicts — (id·2 | side, (row, matchedHere)).
-        // Stream ids are even, build ids odd; the reduce OR-merges flags.
-        val verdicts: RDD[(Long, (InternalRow, Boolean))] =
-          cg.mapPartitionsWithIndex { (pidx, groups) =>
-            val joinedRow = new JoinedRow
-            val pred = residLocal.map(Predicate.create(_, pairSchema))
-            pred.foreach(_.initialize(pidx))
-            def pair(brow: InternalRow, srow: InternalRow): InternalRow =
-              if (buildIsLeft) joinedRow(brow, srow) else joinedRow(srow, brow)
-            groups.flatMap { case ((_, bin), (buildRows, streamRows)) =>
-              val out = mutable.ArrayBuffer.empty[(Long, (InternalRow, Boolean))]
-              buildRowsMetric += buildRows.size
-              val forest =
-                if (bin == sentinelBin || buildRows.isEmpty) null
-                else IntervalForest(buildRows.map { case (bid, s, e, r) => (s, e, (bid, r)) }.toIndexedSeq)
-              val matchedBids = if (fullOuter) mutable.HashSet.empty[Long] else null
-              streamRows.foreach { case (id, qs, qe, srow) =>
-                var matchedHere = false
-                if (forest != null) {
-                  forest.foreachOverlap(qs, qe) { (bs, be, v) =>
-                    if ((minOv <= 1 || math.min(be, qe) - math.max(bs, qs) + 1 >= minOv) &&
-                        pred.forall(_.eval(pair(v._2, srow)))) {
-                      matchedHere = true
-                      if (fullOuter) matchedBids += v._1
-                    }
-                  }
-                }
-                if (!(jt == LeftSemi && !matchedHere))
-                  out += ((id << 1, (srow, matchedHere)))
-              }
-              if (fullOuter) buildRows.iterator.foreach { case (bid, _, _, brow) =>
-                out += (((bid << 1) | 1L, (brow, matchedBids.contains(bid))))
-              }
-              out.iterator
-            }
-          }
-
-        val preserved: RDD[InternalRow] = verdicts
-          .reduceByKey((a, b) => (a._1, a._2 || b._2), numParts)
-          .mapPartitions[InternalRow] { it =>
-            val joinedRow = new JoinedRow
-            val resultProj = UnsafeProjection.create(outAttrs, outAttrs)
-            val nullBuild = new GenericInternalRow(nBuildCols)
-            val nullStream = new GenericInternalRow(nStreamCols)
-            def pair(brow: InternalRow, srow: InternalRow): InternalRow =
-              if (buildIsLeft) joinedRow(brow, srow) else joinedRow(srow, brow)
-            it.flatMap { case (key, (row, matched)) =>
-              jt match {
-                case LeftSemi =>
-                  numOutputRows += 1; Iterator.single(resultProj(row))
-                case LeftAnti =>
-                  if (matched) Iterator.empty
-                  else { numOutputRows += 1; Iterator.single(resultProj(row)) }
-                case FullOuter =>
-                  if (matched) Iterator.empty
-                  else {
-                    numOutputRows += 1
-                    val padded =
-                      if ((key & 1L) == 1L) pair(row, nullStream) else pair(nullBuild, row)
-                    Iterator.single(resultProj(padded))
-                  }
-                case _ => // LeftOuter / RightOuter
-                  if (matched) Iterator.empty
-                  else { numOutputRows += 1; Iterator.single(resultProj(pair(nullBuild, row))) }
-              }
-            }
-          }
-
-        jt match {
-          case LeftSemi | LeftAnti => preserved
-          case _ => pairRows.union(preserved)
-        }
+    joinType match {
+      case LeftSemi | LeftAnti => preserved
+      case _ => pairRows.union(preserved)
     }
   }
 
@@ -731,17 +310,17 @@ case class IntervalForestJoinExec(
   // (a holder only promises a callback API; the cursor needs the array
   // forest).
   //
-  // LeftSemi/LeftAnti/LeftOuter/RightOuter codegen too (r10 VERDICT #2):
-  // the stream-side probe is the 100 TB hot loop for existence filters and
-  // preserved-side joins just as for Inner. Semi emits on the FIRST
-  // cursor hit (no full match enumeration); anti emits when the cursor is
-  // empty, including the null-interval/null-key/absent-contig rows the
-  // interpreted path preserves; one-sided outer streams the preserved
-  // side and pads a null build row for match-less stream rows (Spark's
-  // own BroadcastHashJoin outer-codegen loop shape — build columns read
-  // through a `matched == null` guard). Residual-carrying non-inner joins
-  // stay interpreted: the residual decides matched-ness per candidate
-  // pair inside the loop. FullOuter keeps the interpreted path (its
+  // LeftSemi/LeftAnti/LeftOuter/RightOuter codegen too: the stream-side
+  // probe is the 100 TB hot loop for existence filters and preserved-side
+  // joins just as for Inner. Semi emits on the FIRST cursor hit (no full
+  // match enumeration); anti emits when the cursor is empty, including the
+  // null-interval/null-key/absent-contig rows the interpreted path
+  // preserves; one-sided outer streams the preserved side and pads a null
+  // build row for match-less stream rows (Spark's own BroadcastHashJoin
+  // outer-codegen loop shape — build columns read through a
+  // `matched == null` guard). Residual-carrying non-inner joins stay
+  // interpreted: the residual decides matched-ness per candidate pair
+  // inside the loop. FullOuter keeps the interpreted path (its
   // unmatched-build pad is a separate driver phase, not a probe shape).
 
   override def supportCodegen: Boolean =
@@ -899,4 +478,165 @@ object IntervalForestJoinExec {
       case f: IntervalForest[InternalRow @unchecked] => f
       case _ => null
     }
+}
+
+/** What the tasks of an [[IntervalForestJoinExec]] need: bound key and
+  * interval expressions of both sides and the join's settings. Task
+  * closures capture this instead of the plan node. */
+private[plans] final case class JoinTask(
+    joinType: JoinType,
+    buildIsLeft: Boolean,
+    minOverlap: Int,
+    maxGap: Int,
+    binWidth: Int,
+    residual: Option[Expression],
+    pairAttrs: Seq[Attribute],
+    outAttrs: Seq[Attribute],
+    nBuildCols: Int,
+    nStreamCols: Int,
+    buildEqs: Seq[Expression],
+    buildIv: Seq[Expression],
+    streamEqs: Seq[Expression],
+    streamIv: Seq[Expression],
+    numOutputRows: SQLMetric,
+    buildRows: SQLMetric) {
+
+  def keyInterval(build: Boolean): KeyInterval =
+    if (build) new KeyInterval(buildEqs, buildIv) else new KeyInterval(streamEqs, streamIv)
+
+  /** Probes every stream row against broadcast per-key holders: inner
+    * pairs, semi/anti existence, or one-sided outer (the stream side is
+    * the preserved side) — also full outer's main pass, whose payload
+    * carries the build-row index beside the row. */
+  def probeStream[V](stream: RDD[InternalRow],
+      bcast: Broadcast[Map[UnsafeRow, IntervalHolder[V]]],
+      rowOf: V => InternalRow): RDD[InternalRow] =
+    stream.mapPartitionsWithIndex { (pidx, it) =>
+      val kv = keyInterval(build = false)
+      val p = new Probe(this, pidx)
+      val holders = bcast.value
+      val emitsPairs = joinType != LeftSemi && joinType != LeftAnti
+      it.flatMap { srow =>
+        val matches = mutable.ArrayBuffer.empty[InternalRow]
+        if (kv(srow)) holders.get(kv.key).foreach { h =>
+          p.foreachMatch(h, kv.start, kv.end, srow, rowOf)(v => matches += rowOf(v))
+        }
+        (if (emitsPairs) p.pairs(srow, matches.iterator) else Iterator.empty[InternalRow]) ++
+          p.preserved(srow, matches.nonEmpty)
+      }
+    }
+
+  /** Replicates each row to every bin its interval (the build side's
+    * widened by maxGap) overlaps, keyed by `(eqKey, bin)` and tagged with a
+    * unique id (zipWithUniqueId: no extra job). A row that can never match
+    * goes once to [[JoinTask.NoBin]] if the join preserves it — every
+    * stream row, and build rows of a full outer join — else it is dropped.
+    * Build rows are counted in `buildRows` once, before replication. */
+  def binned(rows: RDD[InternalRow], build: Boolean)
+      : RDD[((UnsafeRow, Int), (Long, Int, Int, InternalRow))] = {
+    val widen = if (build) maxGap else 0
+    val keep = !build || joinType == FullOuter
+    rows.zipWithUniqueId().mapPartitions { it =>
+      val kv = keyInterval(build)
+      it.flatMap { case (row, id) =>
+        if (kv(row)) {
+          if (build) buildRows += 1
+          val (s, e) = (kv.start - widen, kv.end + widen)
+          val (k, copy) = (kv.key.copy(), row.copy())
+          (Math.floorDiv(math.min(s, e), binWidth) to Math.floorDiv(math.max(s, e), binWidth))
+            .iterator.map(b => ((k, b), (id, s, e, copy)))
+        } else if (keep) {
+          if (build) buildRows += 1
+          Iterator.single(((kv.key.copy(), JoinTask.NoBin), (id, 0, 0, row.copy())))
+        } else Iterator.empty
+      }
+    }
+  }
+}
+
+private[plans] object JoinTask {
+  /** Not a genome bin: the group of rows that can never match, and the
+    * `bin` argument of a probe that needs no first-bin test. */
+  val NoBin: Int = Int.MinValue
+
+  /** A bin's local forest over its build replicas, payload `(id, row)`;
+    * maxGap widening was applied at replication. */
+  def forestOf(build: Iterable[(Long, Int, Int, InternalRow)]): IntervalForest[(Long, InternalRow)] =
+    IntervalForest(build.map { case (id, s, e, r) => (s, e, (id, r)) }.toIndexedSeq)
+}
+
+/** Projects a row's equality key and interval. `apply` says whether the
+  * row can match at all: a null bound or a null key never satisfies the
+  * join predicate. `key` is set either way (and reused by the next call);
+  * `start` and `end` only for a row that can match. */
+private[plans] final class KeyInterval(eqs: Seq[Expression], iv: Seq[Expression]) {
+  private val keyProj = UnsafeProjection.create(eqs)
+  private val ivProj = UnsafeProjection.create(iv)
+  var key: UnsafeRow = _
+  var start = 0
+  var end = 0
+
+  def apply(row: InternalRow): Boolean = {
+    key = keyProj(row)
+    val bounds = ivProj(row)
+    if (bounds.isNullAt(0) || bounds.isNullAt(1) || key.anyNull) false
+    else {
+      start = bounds.getInt(0)
+      end = bounds.getInt(1)
+      true
+    }
+  }
+}
+
+/** One partition's probe state: the candidate test and the output rows. */
+private[plans] final class Probe(t: JoinTask, partitionIndex: Int) {
+  private val joined = new JoinedRow
+  private val project = UnsafeProjection.create(t.outAttrs, t.outAttrs)
+  private val residual = t.residual.map { r =>
+    val pred = Predicate.create(r, t.pairAttrs)
+    pred.initialize(partitionIndex)
+    pred
+  }
+  private val nullBuild = new GenericInternalRow(t.nBuildCols)
+  private val nullStream = new GenericInternalRow(t.nStreamCols)
+
+  /** Candidate pairs are always assembled in (left, right) order. */
+  private def pair(brow: InternalRow, srow: InternalRow): InternalRow =
+    if (t.buildIsLeft) joined(brow, srow) else joined(srow, brow)
+
+  private def emit(row: InternalRow): InternalRow = {
+    t.numOutputRows += 1
+    project(row)
+  }
+
+  /** Calls `f` on each value of `holder` whose interval overlaps
+    * `[qs, qe]` by at least minOverlap and whose pair with `srow` passes
+    * the residual. Unless `bin` is [[JoinTask.NoBin]], the pair must also
+    * have its intersection start in `bin`, so a pair seen in several bins
+    * is emitted from one. */
+  def foreachMatch[V](holder: IntervalHolder[V], qs: Int, qe: Int, srow: InternalRow,
+      rowOf: V => InternalRow, bin: Int = JoinTask.NoBin)(f: V => Unit): Unit =
+    holder.foreachOverlap(qs, qe) { (bs, be, v) =>
+      if ((t.minOverlap <= 1 || math.min(be, qe) - math.max(bs, qs) + 1 >= t.minOverlap) &&
+          (bin == JoinTask.NoBin ||
+            Math.floorDiv(math.max(math.min(bs, be), math.min(qs, qe)), t.binWidth) == bin) &&
+          residual.forall(_.eval(pair(rowOf(v), srow))))
+        f(v)
+    }
+
+  def pairs(srow: InternalRow, matches: Iterator[InternalRow]): Iterator[InternalRow] =
+    matches.map(brow => emit(pair(brow, srow)))
+
+  /** What a stream row yields beyond its pairs: itself for semi (matched)
+    * and anti (unmatched), null-padded when an outer join left it
+    * unmatched. */
+  def preserved(srow: InternalRow, matched: Boolean): Iterator[InternalRow] = t.joinType match {
+    case Inner => Iterator.empty
+    case LeftSemi => if (matched) Iterator.single(emit(srow)) else Iterator.empty
+    case LeftAnti => if (matched) Iterator.empty else Iterator.single(emit(srow))
+    case _ => if (matched) Iterator.empty else Iterator.single(emit(pair(nullBuild, srow)))
+  }
+
+  /** A full outer join's unmatched build row, null-padded. */
+  def unmatchedBuild(brow: InternalRow): InternalRow = emit(pair(brow, nullStream))
 }

@@ -9,23 +9,25 @@ import org.apache.spark.sql.execution.{FilterExec, SparkPlan, SparkStrategy}
   * [[ExtractIntervalJoin]] (reference strategy:
   * `rangejoins/methods/IntervalTree/IntervalTreeJoinStrategyOptim.scala:16-51`).
   *
-  * Build-side and broadcast-vs-two-phase selection use Catalyst plan
+  * Build-side and broadcast-vs-bin-range selection use Catalyst plan
   * statistics instead of the reference's runtime `count()` jobs + JOL object
   * sizing (`IntervalTreeJoinOptimChromosome.scala:72-88`,
   * `rangejoins/optimizer/JoinOptimizerChromosome.scala:19-63`) — zero extra
-  * jobs, same decision. Conf knobs (defaults in parens):
+  * jobs, same decision. One engine per regime: the broadcast forest under
+  * the budget; over it, [[BinRangeRewrite]] for inner joins and the exec's
+  * bin-range mode for the other join types. Conf knobs (defaults in parens):
   *
   *  - `spark.graft.rangejoin.enabled` (true) — fall back to stock Spark
   *    (BroadcastNestedLoopJoin) when false; used by differential tests.
   *  - `spark.graft.rangejoin.minOverlap` (1), `spark.graft.rangejoin.maxGap` (0)
-  *  - `spark.graft.rangejoin.method` (auto | broadcast | binrange;
-  *    `twophase` accepted as a legacy alias for the shuffle fallback)
+  *  - `spark.graft.rangejoin.method` (auto | broadcast | binrange)
   *  - `spark.graft.rangejoin.buildSide` (auto | left | right) — the
   *    reference's `useJoinOrder` analogue (auto picks the smaller by stats).
-  *  - `spark.graft.rangejoin.maxBroadcastBytes` (256 MiB) — auto threshold
-  *    between broadcast and the bin-range shuffle join.
-  *  - `spark.graft.rangejoin.binWidth` (5000) — genome-bin width of the
-  *    shuffle fallback; both sides replicate per overlapped bin.
+  *  - `spark.graft.rangejoin.maxBroadcastBytes` (256 MiB, [[BroadcastBudget]])
+  *    — auto threshold between broadcast and the bin-range shuffle join.
+  *  - `spark.graft.rangejoin.binWidth` (300 for the inner rewrite, 5000
+  *    for the non-inner exec) — genome-bin width of the shuffle regime;
+  *    both sides replicate per overlapped bin.
   *  - `spark.graft.rangejoin.intervalHolderClass`
   *    (graft.operators.IntervalForestFactory) — the broadcast-side
   *    structure factory, the reference's `intervalHolderClassName`
@@ -58,25 +60,24 @@ case class IntervalJoinStrategy(session: SparkSession) extends SparkStrategy {
       // tracked globally by the exec), so either side may build.
       val (buildLeft, binRange) = RangeJoinChoice.choose(
         conf, joinType, left, right, hint, method)
-      val mode = if (binRange) BinRangeMode else BroadcastForestMode
       // Inner at shuffle scale plans as a pure Catalyst equi-join rewrite
-      // (Tungsten shuffle + codegen + AQE skew splitting); the RDD-cogroup
-      // exec stays available under binrangeImpl=cogroup for differential
-      // tests, and still carries the non-inner verdict machinery.
+      // (Tungsten shuffle + codegen + AQE skew splitting) — normally
+      // already applied by BinRangeLogicalRule; this covers sessions that
+      // register the strategy without the rule. Non-inner joins take the
+      // exec's bin-range mode, which carries the matched-row verdicts.
       //
       // Default bin width differs by engine: the rewrite SCANS each
       // (key,bin) group's pairs, so narrow bins win (pairs/bin shrinks
       // faster than replication grows until width ~ interval length);
       // the forest PROBES, so wide bins amortize its build. Measured at
-      // sf0.1 (600k x 20k, 3.55M pairs): rewrite 1.15s @300 vs cogroup
-      // 1.75s @5000 (rewrite @5000: 2.8s — pair-scan blowup).
-      val sqlBinRange = mode == BinRangeMode && joinType == Inner &&
-        conf("binrangeImpl", "sql") == "sql"
-      val binWidth = conf("binWidth", if (sqlBinRange) "300" else "5000").toInt
-      if (sqlBinRange) {
-        return planLater(BinRangeRewrite.rewrite(
-          left, right, keys, buildLeft, minOverlap, maxGap, binWidth)) :: Nil
+      // sf0.1 (600k x 20k, 3.55M pairs): rewrite 1.15s @300 vs a per-bin
+      // forest 1.75s @5000 (rewrite @5000: 2.8s — pair-scan blowup).
+      if (binRange && joinType == Inner) {
+        return planLater(BinRangeRewrite.rewrite(left, right, keys, buildLeft,
+          minOverlap, maxGap, conf("binWidth", "300").toInt)) :: Nil
       }
+      val mode = if (binRange) BinRangeMode else BroadcastForestMode
+      val binWidth = conf("binWidth", "5000").toInt
       val holderClass = conf("intervalHolderClass",
         classOf[graft.operators.IntervalForestFactory].getName)
       // Inner: residual stays a post-join FilterExec (whole-stage codegen

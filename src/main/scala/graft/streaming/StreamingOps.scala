@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.operators.{EmbeddingOps, IntervalForest, TextOps}
+import graft.plans.BroadcastBudget
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
@@ -69,14 +70,10 @@ object StreamingOps {
     val spark = docs.sparkSession
     import spark.implicits._
     import graft.operators.DedupOps
-    val maxBytes = spark.conf
-      .get("spark.graft.rangejoin.maxBroadcastBytes", (256L << 20).toString).toLong
-    val estimated = base.queryExecution.optimizedPlan.stats.sizeInBytes
-    require(estimated <= BigInt(maxBytes),
-      s"dedupGateStream base corpus is estimated at $estimated bytes, over " +
-      s"spark.graft.rangejoin.maxBroadcastBytes=$maxBytes — its shingle index is " +
-      "collected and broadcast. Dedup against a corpus this size with the batch " +
-      "DedupOps.crossDupPairs instead, or raise the conf if the driver can hold it.")
+    BroadcastBudget.requireFits(base, "dedupGateStream base corpus",
+      "its shingle index is collected and broadcast. Dedup against a corpus this size " +
+      "with the batch DedupOps.crossDupPairs instead, or raise the conf if the driver can " +
+      "hold it.")
     // Persist barrier: shR feeds BOTH the exact-shingle map collect and
     // the minhash/band index collect below — unpersisted, the tokenize +
     // shingle scan of the base corpus runs twice.
@@ -145,14 +142,10 @@ object StreamingOps {
     val spark = vecs.sparkSession
     import spark.implicits._
     require(k >= 1, s"k must be positive, got $k")
-    val maxBytes = spark.conf
-      .get("spark.graft.rangejoin.maxBroadcastBytes", (256L << 20).toString).toLong
-    val estimated = corpus.queryExecution.optimizedPlan.stats.sizeInBytes
-    require(estimated <= BigInt(maxBytes),
-      s"similarStream corpus is estimated at $estimated bytes, over " +
-      s"spark.graft.rangejoin.maxBroadcastBytes=$maxBytes — it is collected and " +
-      "broadcast. Use the batch EmbeddingOps paths (IVF/LSH/quantized) for a " +
-      "corpus this size, or raise the conf if the driver can hold it.")
+    BroadcastBudget.requireFits(corpus, "similarStream corpus",
+      "it is collected and broadcast. Use the batch EmbeddingOps paths " +
+      "(IVF/LSH/quantized) for a corpus this size, or raise the conf if the driver can " +
+      "hold it.")
     val base: Array[(Long, Array[Double])] = corpus
       .select(col("vec_id"), col("embedding").cast("array<double>"))
       .as[(Long, Seq[Double])].collect().map { case (i, e) => (i, e.toArray) }
@@ -476,14 +469,9 @@ object StreamingOps {
   def annotateStream(reads: Dataset[StreamRead], targets: DataFrame): DataFrame = {
     val spark = reads.sparkSession
     import spark.implicits._
-    val maxBytes = spark.conf
-      .get("spark.graft.rangejoin.maxBroadcastBytes", (256L << 20).toString).toLong
-    val estimated = targets.queryExecution.optimizedPlan.stats.sizeInBytes
-    require(estimated <= BigInt(maxBytes),
-      s"annotateStream static side is estimated at $estimated bytes, over " +
-      s"spark.graft.rangejoin.maxBroadcastBytes=$maxBytes — it is collected " +
-      "to the driver and broadcast as an interval forest. Filter/project the " +
-      "annotation table down, or raise the conf if the driver can hold it.")
+    BroadcastBudget.requireFits(targets, "annotateStream static side",
+      "it is collected to the driver and broadcast as an interval forest. Filter/project " +
+      "the annotation table down, or raise the conf if the driver can hold it.")
     val collected = targets
       .select(col("contig").cast("string"), col("pos_start").cast("int"),
         col("pos_end").cast("int"), col("name").cast("string"))
@@ -516,13 +504,8 @@ object StreamingOps {
   def countStream(reads: Dataset[StreamRead], targets: DataFrame): DataFrame = {
     val spark = reads.sparkSession
     import spark.implicits._
-    val maxBytes = spark.conf
-      .get("spark.graft.rangejoin.maxBroadcastBytes", (256L << 20).toString).toLong
-    val estimated = targets.queryExecution.optimizedPlan.stats.sizeInBytes
-    require(estimated <= BigInt(maxBytes),
-      s"countStream static side is estimated at $estimated bytes, over " +
-      s"spark.graft.rangejoin.maxBroadcastBytes=$maxBytes — it is collected " +
-      "to the driver as per-contig rank arrays. Filter/project the " +
+    BroadcastBudget.requireFits(targets, "countStream static side",
+      "it is collected to the driver as per-contig rank arrays. Filter/project the " +
       "annotation table down, or raise the conf if the driver can hold it.")
     val collected = targets
       .select(col("contig").cast("string"), col("pos_start").cast("int"),
@@ -572,14 +555,9 @@ object StreamingOps {
   def nearestStream(reads: Dataset[StreamRead], targets: DataFrame): DataFrame = {
     val spark = reads.sparkSession
     import spark.implicits._
-    val maxBytes = spark.conf
-      .get("spark.graft.rangejoin.maxBroadcastBytes", (256L << 20).toString).toLong
-    val estimated = targets.queryExecution.optimizedPlan.stats.sizeInBytes
-    require(estimated <= BigInt(maxBytes),
-      s"nearestStream static side is estimated at $estimated bytes, over " +
-      s"spark.graft.rangejoin.maxBroadcastBytes=$maxBytes — it is collected " +
-      "to the driver and broadcast as an interval forest. Filter/project the " +
-      "annotation table down, or raise the conf if the driver can hold it.")
+    BroadcastBudget.requireFits(targets, "nearestStream static side",
+      "it is collected to the driver and broadcast as an interval forest. Filter/project " +
+      "the annotation table down, or raise the conf if the driver can hold it.")
     val collected = targets
       .select(col("contig").cast("string"), col("pos_start").cast("int"),
         col("pos_end").cast("int"), col("name").cast("string"))
@@ -605,14 +583,9 @@ object StreamingOps {
     require(k >= 1, s"nearestKStream needs k >= 1, got $k")
     val spark = reads.sparkSession
     import spark.implicits._
-    val maxBytes = spark.conf
-      .get("spark.graft.rangejoin.maxBroadcastBytes", (256L << 20).toString).toLong
-    val estimated = targets.queryExecution.optimizedPlan.stats.sizeInBytes
-    require(estimated <= BigInt(maxBytes),
-      s"nearestKStream static side is estimated at $estimated bytes, over " +
-      s"spark.graft.rangejoin.maxBroadcastBytes=$maxBytes — it is collected " +
-      "to the driver and broadcast as an interval forest. Filter/project the " +
-      "annotation table down, or raise the conf if the driver can hold it.")
+    BroadcastBudget.requireFits(targets, "nearestKStream static side",
+      "it is collected to the driver and broadcast as an interval forest. Filter/project " +
+      "the annotation table down, or raise the conf if the driver can hold it.")
     val collected = targets
       .select(col("contig").cast("string"), col("pos_start").cast("int"),
         col("pos_end").cast("int"), col("name").cast("string"))

@@ -7,6 +7,29 @@ import org.apache.spark.sql.functions._
   * Datasets, plus the pipeline operators. */
 class GraftSessionSpec extends SparkSpec {
 
+  test("a second Graft.ensure registers nothing") {
+    Graft.ensure(spark)
+    val state = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState
+    def registered() =
+      Seq(state.functionRegistry, state.tableFunctionRegistry).map { reg =>
+        reg.listFunction().map(id => id -> reg.lookupFunctionBuilder(id).get).toMap
+      }
+    val before = registered()
+    val pileup = graft.functions.PileupUDFs.udfs.map(_._1)
+    assert(pileup.forall(n => before.head.keys.exists(_.funcName == n)))
+    val strategies = spark.experimental.extraStrategies
+    val rules = spark.experimental.extraOptimizations
+    Graft.ensure(spark)
+    registered().zip(before).foreach { case (after, was) =>
+      assert(after.keySet === was.keySet)
+      // A re-registration would install a new builder object.
+      assert(after.forall { case (id, b) => b eq was(id) },
+        after.collect { case (id, b) if !(b eq was(id)) => id }.mkString(", "))
+    }
+    assert(spark.experimental.extraStrategies === strategies)
+    assert(spark.experimental.extraOptimizations === rules)
+  }
+
   test("typed coverage/pileup Datasets match the DataFrame surface") {
     val gs = GraftSession(spark)
     val reads = Tables.reads(spark, sf0001).filter(col("sample_id") === "s1")

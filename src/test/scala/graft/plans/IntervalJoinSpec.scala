@@ -93,7 +93,6 @@ class IntervalJoinSpec extends SparkSpec {
     val base = collectSorted(joined(a, b))
     for ((k, v) <- Seq(
         "spark.graft.rangejoin.method" -> "binrange",
-        "spark.graft.rangejoin.method" -> "twophase", // legacy alias
         "spark.graft.rangejoin.buildSide" -> "left",
         "spark.graft.rangejoin.buildSide" -> "right")) {
       assert(withConf(k, v) { collectSorted(joined(a, b)) } === base, s"$k=$v")
@@ -293,21 +292,47 @@ class IntervalJoinSpec extends SparkSpec {
     assert(run("true") === run("false"))
   }
 
-  test("bin-range SQL rewrite and cogroup exec agree (incl. gap/overlap confs)") {
+  test("bin-range rewrite equals the broadcast forest (with gap/overlap confs)") {
     val a = randomIntervals(300, 77, "a_key")
     val b = randomIntervals(60, 78, "b_key")
     for ((ov, gap) <- Seq((1, 0), (10, 0), (1, 25))) {
-      val run = (impl: String) =>
-        withConf("spark.graft.rangejoin.method", "binrange") {
-          withConf("spark.graft.rangejoin.binrangeImpl", impl) {
-            withConf("spark.graft.rangejoin.minOverlap", ov.toString) {
-              withConf("spark.graft.rangejoin.maxGap", gap.toString) {
-                collectSorted(joined(a, b))
-              }
+      val run = (method: String) =>
+        withConf("spark.graft.rangejoin.method", method) {
+          withConf("spark.graft.rangejoin.minOverlap", ov.toString) {
+            withConf("spark.graft.rangejoin.maxGap", gap.toString) {
+              val df = joined(a, b)
+              (collectSorted(df), physical(df).toString)
             }
           }
         }
-      assert(run("sql") === run("cogroup"), s"minOverlap=$ov maxGap=$gap")
+      val (forest, forestPlan) = run("broadcast")
+      val (rewrite, rewritePlan) = run("binrange")
+      assert(forestPlan.contains("BroadcastForestMode"), forestPlan)
+      assert(rewritePlan.contains("__graft_bin_") && !rewritePlan.contains("IntervalForestJoin"),
+        rewritePlan)
+      assert(forest.nonEmpty)
+      assert(rewrite === forest, s"minOverlap=$ov maxGap=$gap")
+    }
+  }
+
+  test("over budget, inner joins plan the rewrite and non-inner joins the bin-range exec") {
+    // The benchmark's regime check reads these strings from the final plan.
+    val a = randomIntervals(300, 15, "a_key")
+    val b = randomIntervals(50, 16, "b_key")
+    def finalPlanText(df: DataFrame): String = {
+      df.collect()
+      (physical(df) match {
+        case ap: AdaptiveSparkPlanExec => ap.executedPlan
+        case p => p
+      }).treeString
+    }
+    withConf("spark.graft.rangejoin.maxBroadcastBytes", "1") {
+      val inner = finalPlanText(joined(a, b))
+      assert(inner.contains("__graft_bin_") && !inner.contains("IntervalForestJoin"), inner)
+      for (jt <- Seq("left_outer", "right_outer", "left_semi", "left_anti", "full_outer")) {
+        val text = finalPlanText(typedJoin(a, b, jt))
+        assert(text.contains("IntervalForestJoin") && text.contains("BinRangeMode"), s"$jt:\n$text")
+      }
     }
   }
 
@@ -481,6 +506,36 @@ class IntervalJoinSpec extends SparkSpec {
         collectAllSorted(a.join(b, cond, jt))
       }
       assert(bin === stock, s"$jt binrange+residual")
+    }
+  }
+
+  test("non-inner minOverlap and maxGap confs match stock Spark in both modes") {
+    val a = withUnmatchable(randomIntervals(300, 69, "a_key"), "a_key")
+    val b = withUnmatchable(randomIntervals(40, 70, "b_key"), "b_key")
+    val sameContig = a("contig") === b("contig")
+    val overlap = a("pos_end") >= b("pos_start") && a("pos_start") <= b("pos_end")
+    // The confs' semantics written out for stock Spark: an overlap of at
+    // least 10 bases, or intervals at most 25 bases apart.
+    val cells = Seq(
+      ("spark.graft.rangejoin.minOverlap", "10", sameContig && overlap &&
+        least(a("pos_end"), b("pos_end")) - greatest(a("pos_start"), b("pos_start")) + 1 >= 10),
+      ("spark.graft.rangejoin.maxGap", "25", sameContig &&
+        a("pos_end") >= b("pos_start") - 25 && a("pos_start") <= b("pos_end") + 25))
+    for ((key, value, stockCond) <- cells;
+         jt <- Seq("left_outer", "right_outer", "left_semi", "left_anti", "full_outer")) {
+      val stock = withConf("spark.graft.rangejoin.enabled", "false") {
+        collectAllSorted(a.join(b, stockCond, jt))
+      }
+      for (method <- Seq("broadcast", "binrange")) {
+        val got = withConf(key, value) {
+          withConf("spark.graft.rangejoin.method", method) {
+            val df = typedJoin(a, b, jt)
+            assert(usesForestJoin(df), s"$jt $key=$value $method must plan the forest join")
+            collectAllSorted(df)
+          }
+        }
+        assert(got === stock, s"$jt $key=$value $method")
+      }
     }
   }
 
@@ -942,11 +997,26 @@ class IntervalJoinSpec extends SparkSpec {
     val stock = withConf("spark.graft.rangejoin.enabled", "false") {
       collectAllSorted(typedJoin(a, b, "left_outer"))
     }
-    val got = withConf("spark.graft.rangejoin.method", "binrange") {
-      withConf("spark.graft.rangejoin.binWidth", "7") {
-        collectAllSorted(typedJoin(a, b, "left_outer"))
+    // The buildRows metric counts each build row once in both modes, not
+    // once per bin replica.
+    def buildRows(df: DataFrame): Long = {
+      def find(p: SparkPlan): Option[IntervalForestJoinExec] = p match {
+        case e: IntervalForestJoinExec => Some(e)
+        case ap: AdaptiveSparkPlanExec => find(ap.executedPlan)
+        case other => other.children.view.flatMap(find).headOption
+      }
+      find(physical(df)).get.metrics("buildRows").value
+    }
+    for (method <- Seq("broadcast", "binrange")) {
+      withConf("spark.graft.rangejoin.method", method) {
+        withConf("spark.graft.rangejoin.binWidth", "7") {
+          val df = typedJoin(a, b, "left_outer")
+          assert(collectAllSorted(df) === stock, method)
+          assert(physical(df).toString.contains(
+            if (method == "broadcast") "BroadcastForestMode" else "BinRangeMode"))
+          assert(buildRows(df) === b.count(), s"$method buildRows")
+        }
       }
     }
-    assert(got === stock)
   }
 }
